@@ -1,31 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // static conf, must be set before the first session (round 17,
-      // VERDICT r16 #1): the default 100-entry codegen cache evicts
-      // every generated class several times across a 429-query sweep,
-      // so the timed pass re-Janinos (and re-JITs) code the warmup
-      // sweep already compiled. A full-registry session generates
-      // ~2-3k distinct codegen units (CODEGEN_AUDIT_r16: ~2k WSCG
-      // stages + projections/predicates/orderings); 4096 retains them
-      // all, making warmup compilation actually pay for the timed pass.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    // AQE partition-sizing policy (optimization round 19): coalesce
-    // post-shuffle partitions by bytes INCLUDING inside cached-plan
-    // subtrees — see GraftSession.tunedShuffleConfs for the rationale
-    // and the measured evidence. Runtime SQL confs; same methodology,
-    // same queries, same timing as before.
-    graft.core.GraftSession.tunedShuffleConfs
-      .foreach { case (k, v) => spark.conf.set(k, v) }
+    val cpus = graft.core.GraftSession.cpus
+    val spark = graft.core.GraftSession.create("graft-bench", s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("WARN")
     // ---- self-diagnosing sidecar (VERDICT r12 #1): the r12 driver
     // bench collapsed 2.17× on unchanged code in one alphabetical
@@ -183,29 +161,17 @@ object Bench {
     // per-query classes_loaded sidecar field counts classes loaded
     // during timed runs (nonzero = regeneration happened anyway), and
     // warmup_s/jit_drain_s land in the run-level JSON.
-    // SPARK_GRAFT_WARMUP=quick restores the r14 8-query warmup for
-    // fast local iteration; SPARK_GRAFT_ONLY skips warmup entirely.
-    val warmupMode = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "full")
+    // SPARK_GRAFT_ONLY skips warmup entirely.
     var warmupS = -1.0; var jitDrainS = -1.0
     if (only.isEmpty) {
       val w0 = System.nanoTime()
-      if (warmupMode == "quick") {
-        val warmup = Seq("q1_pricing_summary", "window_running_total",
-          "q3_top_orders", "dedup_exact", "ann_lsh_topk", "embedding_kmeans",
-          "triangle_count", "ks_test")
-        warmup.foreach { n =>
-          try SparkEntry.queries(n)(spark, sfDir).count()
-          catch { case scala.util.control.NonFatal(_) => () }
-        }
-      } else {
-        graft.core.SharedFrames.planQueries(names)
-        names.foreach { n =>
-          graft.core.SharedFrames.begin(n)
-          try SparkEntry.queries(n)(spark, sfDir).count()
-          catch { case scala.util.control.NonFatal(_) => () }
-          graft.core.OwnedCaches.release()
-          graft.core.SharedFrames.queryDone(n)
-        }
+      graft.core.SharedFrames.planQueries(names)
+      names.foreach { n =>
+        graft.core.SharedFrames.begin(n)
+        try SparkEntry.queries(n)(spark, sfDir).count()
+        catch { case scala.util.control.NonFatal(_) => () }
+        graft.core.OwnedCaches.release()
+        graft.core.SharedFrames.queryDone(n)
       }
       spark.catalog.clearCache()
       graft.core.SharedFrames.reset()
@@ -290,8 +256,7 @@ object Bench {
     // re-measured through the identical path and the better (wall,
     // sidecar) pair adopted per query. Count-based (not time-based)
     // slice: deterministic across rounds on the same sorted registry.
-    val headN = sys.env.get("SPARK_GRAFT_HEAD_RERUN").map(_.toInt)
-      .getOrElse(if (only.isEmpty && !isolate) 120 else 0)
+    val headN = if (only.isEmpty && !isolate) 120 else 0
     var headAdopted = 0
     val head = names.take(headN)
     if (head.nonEmpty) {
@@ -310,15 +275,7 @@ object Bench {
     // Locale.ROOT: f"%.3f" under a comma-decimal default locale (de_DE)
     // would emit 65,584 — invalid JSON that breaks the driver's parse
     def fmt(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    // query keys are compile-time identifiers today, but a stray quote or
-    // backslash in a future key must not emit invalid JSON and break the
-    // driver's parse — escape on every path that quotes a name
-    def esc(s: String): String = s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => String.format(java.util.Locale.ROOT, "\\u%04x", Int.box(c.toInt))
-      case c    => c.toString
-    }
+    import graft.core.Json.quote
     // grand total is always over ALL queries (not just the printed
     // subset) so the headline metric is stable however the line shrinks
     val grandTotal = fmt(results.values.filter(_ >= 0).sum)
@@ -328,12 +285,12 @@ object Bench {
     val failedNames =
       if (grandFailed == 0) ""
       else results.toSeq.filter(_._2 < 0).map(_._1).sorted
-        .map("\"" + esc(_) + "\"").mkString(""","failed_queries":[""", ",", "]")
+        .map(quote).mkString(""","failed_queries":[""", ",", "]")
     // a truncated printed line declares itself (ADVICE r12): consumers
     // must never mistake the slowest-queries subset for the full map
     def render(vals: Map[String, Double], extra: String = ""): String = {
       val qs = vals.toSeq.sortBy(_._1)
-        .map { case (k, v) => "\"" + esc(k) + "\":" + fmt(v) }
+        .map { case (k, v) => quote(k) + ":" + fmt(v) }
         .mkString("{", ",", "}")
       val trunc =
         if (vals.size == results.size) ""
@@ -341,8 +298,8 @@ object Bench {
       s"""{"metric":"total","value":$grandTotal,"unit":"sec","queries":$qs,"sf":"$sfDir","runs":2,"agg":"min","order":"sorted","isolated":$isolate,"failed":$grandFailed$failedNames$trunc$extra}"""
     }
     val (_, undeclared, _) = graft.core.SharedFrames.diagnostics
-    val undeclaredJson = undeclared.map("\"" + esc(_) + "\"").mkString("[", ",", "]")
-    val sidecarJson = sidecar.map { case (k, v) => "\"" + esc(k) + "\":" + v }
+    val undeclaredJson = undeclared.map(quote).mkString("[", ",", "]")
+    val sidecarJson = sidecar.map { case (k, v) => quote(k) + ":" + v }
       .mkString("{", ",", "}")
     // run-level execution-mode summary (round 16): peak code-cache
     // occupancy vs the reserve, and total JIT time — the two numbers
@@ -363,7 +320,7 @@ object Bench {
         s""""jit_total_ms":$jitMs,""" +
         s""""head_rerun_n":${head.length},"head_rerun_adopted":$headAdopted,""" +
         s""""warmup_s":${fmt(warmupS)},"jit_drain_s":${fmt(jitDrainS)},""" +
-        s""""warmup_mode":"${esc(if (only.isEmpty) warmupMode else "skipped")}",""" +
+        s""""warmup_mode":${quote(if (only.isEmpty) "full" else "skipped")},""" +
         s""""available_processors":${Runtime.getRuntime.availableProcessors},""" +
         s""""sidecar":$sidecarJson,"shared_undeclared":$undeclaredJson""")
     // the full per-query map (+ sidecar) always lands in

@@ -74,7 +74,7 @@ object PipelineDemo {
     val chain = Seq.newBuilder[(String, Long)]
     // prove the session extensions exposed the custom functions to SQL
     // (works on any session built by GraftSession; self-register keeps
-    // it working on a bare test session too)
+    // it working on a caller's own session too)
     graft.functions.DotProduct.register(spark)
     println("DEMO graft_dot via SQL = " + spark
       .sql("SELECT graft_dot(array(1.0d,2.0d), array(3.0d,4.0d))").collect()(0).getDouble(0))

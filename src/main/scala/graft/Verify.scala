@@ -10,21 +10,8 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only: Set[String] =
       if (args.length > 2) args(2).split(",").toSet else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same full-session codegen-class retention as Bench (round 17):
-      // the 100-entry default re-Janinos evicted classes several times
-      // across a 429-query dump; static conf, set before first session
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    // AQE partition-sizing policy — same confs as Bench (round 19);
-    // see GraftSession.tunedShuffleConfs
-    graft.core.GraftSession.tunedShuffleConfs
-      .foreach { case (k, v) => spark.conf.set(k, v) }
+    val cpus = graft.core.GraftSession.cpus
+    val spark = graft.core.GraftSession.create("graft-verify", s"local[$cpus]", cpus)
     spark.sparkContext.setLogLevel("WARN")
     run(spark, sfDir, outDir, only)
     spark.stop()
@@ -68,18 +55,7 @@ object Verify {
       graft.core.OwnedCaches.release()
       graft.core.SharedFrames.queryDone(name)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    import graft.core.Json.{quote => q}
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -96,9 +96,5 @@ case class BoundedTopK(k: Int, child: Expression,
 
 object BoundedTopK {
   /** Register `graft_topk(k, struct(ord, id))` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_topk",
-      exprs => BoundedTopK(exprs.head.eval().asInstanceOf[Int], exprs(1)),
-      "scala_udf")
+  def register(spark: SparkSession): Unit = SqlFunctions.topk.register(spark)
 }

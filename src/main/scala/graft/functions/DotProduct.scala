@@ -55,7 +55,5 @@ object DotProduct {
   /** Register `graft_dot` in the session's function registry (idempotent).
     * Callers then use `expr("graft_dot(a, b)")`.
     */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProduct(exprs.head, exprs(1)), "scala_udf")
+  def register(spark: SparkSession): Unit = SqlFunctions.dot.register(spark)
 }

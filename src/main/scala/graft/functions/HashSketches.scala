@@ -99,9 +99,7 @@ case class SimHash64(child: Expression)
 
 object SimHash64 {
   /** Register `graft_simhash(tokens)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash", exprs => SimHash64(exprs.head), "scala_udf")
+  def register(spark: SparkSession): Unit = SqlFunctions.simhash.register(spark)
 }
 
 /** Sorted xxhash64 fingerprints of a string array — the cheap set
@@ -144,9 +142,7 @@ case class SortedHashes(child: Expression)
 
 object SortedHashes {
   /** Register `graft_sorted_hashes(strings)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sorted_hashes", exprs => SortedHashes(exprs.head), "scala_udf")
+  def register(spark: SparkSession): Unit = SqlFunctions.sortedHashes.register(spark)
 }
 
 /** Intersection size of two SORTED long arrays (one merge walk, no
@@ -177,10 +173,7 @@ case class SortedIntersectCount(left: Expression, right: Expression)
 
 object SortedIntersectCount {
   /** Register `graft_sorted_intersect(a, b)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sorted_intersect",
-      exprs => SortedIntersectCount(exprs.head, exprs(1)), "scala_udf")
+  def register(spark: SparkSession): Unit = SqlFunctions.sortedIntersect.register(spark)
 }
 
 /** Sign-random-projection (SimHash-for-vectors) LSH sketch with
@@ -266,9 +259,7 @@ object RademacherSketch {
     }
 
   /** Register `graft_rademacher(embedding)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_rademacher", exprs => RademacherSketch(exprs.head), "scala_udf")
+  def register(spark: SparkSession): Unit = SqlFunctions.rademacher.register(spark)
 }
 
 /** 126-bit signed-random-projection signature of an embedding — the
@@ -357,9 +348,7 @@ object Srp126 {
     }
 
   /** Register `graft_srp126(embedding)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_srp126", exprs => Srp126(exprs.head), "scala_udf")
+  def register(spark: SparkSession): Unit = SqlFunctions.srp126.register(spark)
 }
 
 /** True rolling-hash (Rabin–Karp) document fingerprints: polynomial
@@ -425,9 +414,7 @@ object RollingHashes {
   }
 
   /** Register `graft_rolling_hashes(text)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_rolling_hashes", exprs => RollingHashes(exprs.head), "scala_udf")
+  def register(spark: SparkSession): Unit = SqlFunctions.rollingHashes.register(spark)
 }
 
 /** Robust-winnowing document fingerprints (the MOSS selection rule):
@@ -504,9 +491,7 @@ object WinnowedHashes {
   val W = 4 // winnowing window (hash positions per selection window)
 
   /** Register `graft_winnowed_hashes(text)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_winnowed_hashes", exprs => WinnowedHashes(exprs.head), "scala_udf")
+  def register(spark: SparkSession): Unit = SqlFunctions.winnowedHashes.register(spark)
 }
 
 /** 64-permutation MinHash signature of a shingle array.
@@ -567,7 +552,5 @@ object MinHashSig {
   private[functions] val permB: Array[Long] = permConsts.map(_._2).toArray
 
   /** Register `graft_minhash(shingles)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash", exprs => MinHashSig(exprs.head), "scala_udf")
+  def register(spark: SparkSession): Unit = SqlFunctions.minhash.register(spark)
 }

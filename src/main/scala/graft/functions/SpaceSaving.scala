@@ -127,9 +127,5 @@ case class SpaceSaving(k: Int, child: Expression,
 
 object SpaceSaving {
   /** Register `graft_spacesaving(k, key)` (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_spacesaving",
-      exprs => SpaceSaving(exprs.head.eval().asInstanceOf[Int], exprs(1)),
-      "scala_udf")
+  def register(spark: SparkSession): Unit = SqlFunctions.spaceSaving.register(spark)
 }

@@ -86,7 +86,5 @@ case class UnitVector(child: Expression) extends UnaryExpression {
 
 object UnitVector {
   /** Register `graft_unit` in the session's function registry (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_unit", exprs => UnitVector(exprs.head), "scala_udf")
+  def register(spark: SparkSession): Unit = SqlFunctions.unit.register(spark)
 }

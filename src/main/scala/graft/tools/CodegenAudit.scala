@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.debug
 
 /** Per-query generated-code size audit — the execution-mode
@@ -72,27 +71,18 @@ object CodegenAudit {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val only: Set[String] =
       if (args.length > 1) args(1).split(",").toSet else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // AQE off for the AUDIT only: pre-execution, AdaptiveSparkPlanExec
-      // hides its WholeStageCodegen subtrees from plan.collect, and the
-      // thing being measured — per-expression generated code size — is
-      // identical with and without runtime reoptimization (AQE re-plans
-      // exchanges, never expression codegen)
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
+    val cpus = graft.core.GraftSession.cpus
+    val spark = graft.core.GraftSession.create("graft-codegen-audit", s"local[$cpus]", cpus)
+    // AQE off for the AUDIT only: pre-execution, AdaptiveSparkPlanExec
+    // hides its WholeStageCodegen subtrees from plan.collect, and the
+    // thing being measured — per-expression generated code size — is
+    // identical with and without runtime reoptimization (AQE re-plans
+    // exchanges, never expression codegen)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.sparkContext.setLogLevel("ERROR")
     val names = graft.SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.isEmpty || only.contains(n))
-    def esc(s: String): String = s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
+    import graft.core.Json.quote
     var worst = 0
     names.foreach { name =>
       val line =
@@ -100,12 +90,12 @@ object CodegenAudit {
           val df = graft.SparkEntry.queries(name)(spark, sfDir)
           val (n, mx, over) = audit(df)
           if (mx > worst) worst = mx
-          val overJson = over.map(o => "\"" + esc(o) + "\"").mkString("[", ",", "]")
-          s"""{"query":"${esc(name)}","stages":$n,"max_method_bytes":$mx,""" +
+          val overJson = over.map(quote).mkString("[", ",", "]")
+          s"""{"query":${quote(name)},"stages":$n,"max_method_bytes":$mx,""" +
             s""""stages_over_8000":${over.size},"over":$overJson}"""
         } catch {
           case scala.util.control.NonFatal(e) =>
-            s"""{"query":"${esc(name)}","error":"${esc(e.getClass.getSimpleName + ": " + String.valueOf(e.getMessage).take(120))}"}"""
+            s"""{"query":${quote(name)},"error":${quote(e.getClass.getSimpleName + ": " + String.valueOf(e.getMessage).take(120))}}"""
         }
       println(line)
       graft.core.OwnedCaches.release()

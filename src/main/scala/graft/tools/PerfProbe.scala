@@ -1,6 +1,8 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Measurement harness for the optimization rounds (guide §1): runs
   * named registry queries repeatedly in a Bench-identical session and
@@ -8,31 +10,22 @@ import org.apache.spark.sql.SparkSession
   * that explains latency-bound queries — Spark job count, stage count,
   * task count, summed task run/CPU time, and the Catalyst phase
   * durations (analysis / optimization / planning) from the
-  * QueryPlanningTracker. Usage:
+  * QueryPlanningTracker of the QueryExecution the action ran. Usage:
   *
   *   SPARK_GRAFT_SF_DIR=... sbt "runMain graft.tools.PerfProbe q1 q2"
   *
-  * Optional env: SPARK_GRAFT_PROBE_RUNS (default 3).
+  * Optional env: SPARK_GRAFT_PROBE_RUNS (default 3),
+  * SPARK_GRAFT_PROBE_CONF ("k=v;k=v" runtime conf overrides).
   */
 object PerfProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_PROBE_RUNS", "3").toInt
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-    // Bench-identical AQE partition-sizing policy (round 19) — applied
-    // BEFORE the A/B overrides below so experiments can flip it back
-    graft.core.GraftSession.tunedShuffleConfs
-      .foreach { case (k, v) => builder.config(k, v) }
-    // extra conf overrides for A/B experiments: "k=v;k=v"
+    val cpus = graft.core.GraftSession.cpus
+    val spark = graft.core.GraftSession.create("graft-perf-probe", s"local[$cpus]", cpus)
+    // runtime conf overrides for A/B experiments: "k=v;k=v"
     sys.env.get("SPARK_GRAFT_PROBE_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
-    val spark = builder.getOrCreate()
+      .foreach { kv => val Array(k, v) = kv.split("=", 2); spark.conf.set(k, v) })
     spark.sparkContext.setLogLevel("WARN")
     val jobs = new java.util.concurrent.atomic.AtomicLong
     val stages = new java.util.concurrent.atomic.AtomicLong
@@ -69,6 +62,16 @@ object PerfProbe {
             f"tasks=${i.numTasks}%5d run=${run / 1000.0}%8.2f cpu=${cpu / 1000.0}%8.2f  ${i.name.take(110)}")
         }
     })
+    // `df.count()` executes a NEW QueryExecution (the aggregate over
+    // df), so the Catalyst phases come from the QE the listener sees
+    // run, not from `df.queryExecution`
+    val countQe = new java.util.concurrent.atomic.AtomicReference[QueryExecution]
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].listenerManager
+      .register(new QueryExecutionListener {
+        override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+          if (funcName == "count") countQe.set(qe)
+        override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+      })
     val names = args.toSeq.filter(SparkEntryRef.queries.contains)
     val missing = args.toSeq.filterNot(SparkEntryRef.queries.contains)
     if (missing.nonEmpty) println(s"UNKNOWN: ${missing.mkString(",")}")
@@ -90,13 +93,14 @@ object PerfProbe {
         val df = fn(spark, sfDir)
         val built = (System.nanoTime() - t0) / 1e9
         val n0 = System.nanoTime()
+        countQe.set(null)
         df.count()
         val wall = (System.nanoTime() - t0) / 1e9
         val exec = (System.nanoTime() - n0) / 1e9
         // listener bus is async; give it a beat so counts attribute here
         Thread.sleep(150)
-        val phases = df.queryExecution.tracker.phases
-          .map { case (k, v) => s"$k=${v.durationMs}ms" }.mkString(" ")
+        val phases = Option(countQe.get).map(_.tracker.phases.toSeq.sortBy(_._2.startTimeMs)
+          .map { case (k, v) => s"$k=${v.durationMs}ms" }.mkString(" ")).getOrElse("")
         // SPARK_GRAFT_PROBE_METRICS=1: walk the final executed plan and
         // print per-node SQL metrics (the SQL-tab view) — rows, times
         if (sys.env.get("SPARK_GRAFT_PROBE_METRICS").contains("1") && i == runs) {
@@ -115,7 +119,7 @@ object PerfProbe {
               case _ => p.children.foreach(dump(_, d + 1))
             }
           }
-          dump(df.queryExecution.executedPlan, 0)
+          dump(Option(countQe.get).getOrElse(df.queryExecution).executedPlan, 0)
         }
         println(f"PROBE $n%-30s run$i wall=$wall%7.3f build=$built%6.3f exec=$exec%7.3f " +
           f"jobs=${jobs.get - j0}%3d stages=${stages.get - s0}%4d tasks=${tasks.get - k0}%5d " +

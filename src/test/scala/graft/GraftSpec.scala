@@ -1,24 +1,18 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all suites (one JVM-wide session, local[4]). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // Bench-identical AQE partition-sizing policy (round 19) — tests
-    // must exercise the same coalescing behavior the harnesses run
-    graft.core.GraftSession.tunedShuffleConfs
-      .foreach { case (k, v) => s.conf.set(k, v) }
+    // a static conf, so a system property read by the first session:
+    // saveAsTable tests write under a fresh warehouse, never into one
+    // a previous run left behind
+    sys.props("spark.sql.warehouse.dir") =
+      java.nio.file.Files.createTempDirectory("graft_wh").toString
+    val s = graft.core.GraftSession.create("graft-test", "local[4]", 4)
     s.sparkContext.setLogLevel("WARN")
     s
   }
@@ -346,12 +340,13 @@ class PlanShapeSpec extends AnyFunSuite {
 }
 
 class ExtensionsSpec extends AnyFunSuite {
+  import graft.functions.SqlFunctions
+
   test("registered graft functions are callable from plain SQL") {
-    // the extensions build path (withExtensions) needs a fresh JVM and
-    // is exercised by PipelineDemo; here we drive the runtime-registry
-    // path against the shared session
-    val s = TestSpark.spark
-    graft.core.GraftSession.register(s)
+    // a child of the GraftSession.create session: its registry holds
+    // only what GraftExtensions injected, none of the queries' own
+    // registrations — the register path is exercised below
+    val s = TestSpark.spark.newSession()
     val dot = s.sql("SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d")
       .collect()(0).getDouble(0)
     assert(dot == 11.0)
@@ -368,6 +363,31 @@ class ExtensionsSpec extends AnyFunSuite {
         "VALUES (1.0, 10L), (3.0, 30L), (2.0, 20L) AS t(v, id)")
       .collect()(0).getSeq[org.apache.spark.sql.Row](0)
     assert(topk.map(r => (r.getDouble(0), r.getLong(1))) == Seq((3.0, 30L), (2.0, 20L)))
+  }
+
+  test("newSession() inherits every graft function; register restores them") {
+    val child = TestSpark.spark.newSession()
+    val registry = child.sessionState.functionRegistry
+    SqlFunctions.all.foreach { f =>
+      assert(registry.functionExists(FunctionIdentifier(f.name)), s"${f.name} not inherited")
+      registry.dropFunction(FunctionIdentifier(f.name))
+    }
+    graft.core.GraftSession.register(child)
+    assert(SqlFunctions.all.forall(f => registry.functionExists(FunctionIdentifier(f.name))))
+    assert(child.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+  }
+
+  test("every graft function rejects a wrong argument count by name") {
+    val s = TestSpark.spark
+    SqlFunctions.all.foreach { f =>
+      val args = Seq.fill(f.arity + 1)("1").mkString(", ")
+      val e = intercept[Exception](s.sql(s"SELECT ${f.name}($args)").collect())
+      val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(x => String.valueOf(x.getMessage)).toSeq
+      val expected = s"${f.name} expects ${f.arity} argument(s), got ${f.arity + 1}"
+      assert(messages.exists(_.contains(expected)),
+        s"${f.name}(${f.arity + 1} args): ${messages.mkString(" / ")}")
+    }
   }
 }
 

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -223,12 +224,18 @@ class QueryIsolationSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   test("every query self-registers its functions (fresh-session analysis)") {
-    // newSession() shares the SparkContext but starts an EMPTY function
-    // registry — any query that silently relies on an earlier query
-    // having registered graft_* functions fails analysis here (the bug
-    // class found in annPqTopk during the round-3 plan audit)
+    // newSession() shares the SparkContext and inherits the session
+    // extensions, so every graft function is dropped from the child's
+    // registry first — any query that silently relies on the session
+    // (or an earlier query) having registered graft_* functions fails
+    // analysis here (the bug class found in annPqTopk during the
+    // round-3 plan audit)
     SparkEntry.queries.foreach { case (name, fn) =>
       val fresh = spark.newSession()
+      val registry = fresh.sessionState.functionRegistry
+      graft.functions.SqlFunctions.all
+        .foreach(f => registry.dropFunction(FunctionIdentifier(f.name)))
+      assert(!registry.functionExists(FunctionIdentifier("graft_dot")))
       fresh.conf.set("spark.sql.session.timeZone", "UTC")
       try fn(fresh, TestSpark.sf).queryExecution.analyzed
       catch { case e: Throwable =>
